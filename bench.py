@@ -9,7 +9,7 @@ local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
 
 Headline workload:
   * q_replay        — the flagship: deterministic Debezium event-log replay
-                      (parse -> LWW dedup -> bucketed COW MERGE) sized by sf;
+                      (parse -> bucketed MoR MERGE -> LWW read) sized by sf;
                       `replay_events_per_sec` is the BASELINE.json north metric.
   * q_lww_state     — CDC final-state query over the driver `events` table.
   * q1_pricing      — TPC-H Q1-shaped agg over lineitem (scan+agg throughput).

@@ -1,33 +1,32 @@
 """Exactly-once MERGE sink: a bucketed parquet lake with an Iceberg-style
-snapshot manifest and two merge strategies (COW and merge-on-read).
+snapshot manifest and one merge-on-read ingest path.
 
 Why not Iceberg itself: the sandbox has no Iceberg runtime jar (SURVEY.md
 section 7.3 risk #1), so this module implements the same contract —
 `MERGE INTO sink ON (repo,path) WHEN MATCHED [AND op='d'] DELETE/UPDATE
 WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
 
-* The table is hash-bucketed on the merge key: bucket =
-  pmod(xxhash64(repo, path), n_buckets). A COW MERGE reads and rewrites
-  ONLY the buckets its batch touches (copy-on-write at bucket
-  granularity, like Iceberg COW with bucket partition transform);
+* Ingest (merge_parsed) appends each parsed batch as one RAW delta —
+  no table read, no sort, no shuffle, O(batch) per micro-batch (a 100 TB
+  table cannot be rewritten per micro-batch). LWW resolves at read
+  (small backlogs via a broadcast key-set join against only the
+  delta-touched base buckets — zero table-wide shuffle; large ones via
+  the global aggregate) and at TIERED compaction: every `compact_every`
+  batches a MINOR fold merges the deltas among themselves (O(recent
+  data), no base read), and every `major_every`-th compaction folds into
+  the base — the Iceberg v2 / Hudi / Paimon MoR + LSM-tiering design.
+* The base is hash-bucketed on the merge key: bucket =
+  pmod(xxhash64(repo, path), n_buckets). A MAJOR fold reads and rewrites
+  ONLY the buckets its backlog touches (recorded per delta at commit);
   untouched buckets are carried forward by manifest reference. At 100 TB
-  you'd raise n_buckets so a bucket is a few GB — batch cost scales with
-  batch key spread, not table size.
-* mode='mor' (merge-on-read, the streaming default): a batch appends its
-  rows as DELTA files — no table read, no sort, O(batch) per micro-batch
-  (a 100 TB table cannot be rewritten per micro-batch). LWW resolves at
-  read (small backlogs via a broadcast key-set join against the base —
-  zero table-wide shuffle; large ones via the global aggregate) and at
-  TIERED compaction: every `compact_every` batches a MINOR fold merges
-  the deltas among themselves (O(recent data), no base read), and every
-  `major_every`-th compaction folds into the base — the Iceberg v2 /
-  Hudi / Paimon MoR + LSM-tiering design.
+  you'd raise n_buckets (rebucket()) so a bucket is a few GB — fold cost
+  scales with backlog key spread, not table size.
 * Each commit writes an immutable snapshot manifest (bucket -> data dir,
-  applied batch ids, column list) and atomically swaps the `current`
-  pointer (os.replace). A crash mid-merge leaves the old snapshot
-  current; the streaming retry of the same epoch is detected via the
-  applied-batch-id log and becomes a no-op => idempotent foreachBatch,
-  exactly-once final state (SURVEY.md T1).
+  delta entries, applied batch ids, column list) and atomically swaps
+  the `current` pointer (os.replace). A crash mid-merge leaves the old
+  snapshot current; the streaming retry of the same epoch is detected
+  via the applied-batch-id log and becomes a no-op => idempotent
+  foreachBatch, exactly-once final state (SURVEY.md T1).
 * Deletes are retained as tombstone rows (__deleted=true, with their
   lsn), so a late-replayed OLDER upsert for a deleted key loses the LWW
   merge against the tombstone — strictly safer than the reference, which
@@ -36,9 +35,10 @@ WHEN NOT MATCHED INSERT` (SURVEY.md S5/S6/J2/J3) — on plain parquet:
   real string columns; old files read as null via parquet mergeSchema
   (north rule: new envelope columns auto-propagate to the sink schema).
 
-The MERGE itself is the same map-side-combining hash aggregate as the LWW
-stage: union(target-bucket rows, batch rows) -> max_by per key. Catalyst
-sees one shuffle on the merge key; AQE coalesces/splits partitions.
+Every fold is the same single-exchange hash aggregate as the LWW stage
+(resolve_lww_clustered): union(base buckets, delta rows) -> max_by per
+key. Catalyst sees one shuffle on the merge key; AQE coalesces/splits
+partitions.
 
 Reference parity: upsert = Meilisearch AddDocuments PK-replace
 (sync.go:84), delete = DeleteDocument (sync.go:71,108-113), delete of a
@@ -174,9 +174,9 @@ def resolve_lww(df: DataFrame) -> DataFrame:
     full row by the packed (lsn, tx_id, ts_ms, offset) ordering scalar
     (order.packed_ord) — Kafka arrival order is the final tie-break,
     exactly as the reference's sequential consumer loop would apply an
-    exact-tie pair. Used by the COW merge aggregation and by the MoR read
-    path — max is associative, so resolving at write time, at compaction,
-    or at read time yields the identical winner."""
+    exact-tie pair. Used by the MoR read and lookup paths — max is
+    associative, so resolving at compaction or at read time yields the
+    identical winner."""
     non_key = [c for c in df.columns if c not in KEY_COLS]
     row = F.struct(*[F.col(c) for c in non_key])
     return (
@@ -216,23 +216,18 @@ def resolve_lww_clustered(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 class ParquetLake:
-    """Single-writer lake table. Metadata ops are driver-side file ops on a
-    shared filesystem (local here; a real deployment swaps this layer for
-    an Iceberg/metastore catalog — the data plane is unchanged).
+    """Lake table. Metadata ops are driver-side file ops on a shared
+    filesystem (local here; a real deployment swaps this layer for an
+    Iceberg/metastore catalog — the data plane is unchanged).
 
-    Two merge strategies (same manifest, same exactly-once contract):
-
-    * mode='cow' (copy-on-write): each batch unions with its touched base
-      buckets, resolves LWW, and rewrites those buckets. Read = plain scan.
-      Batch cost is O(touched table data) — right for low-rate tables and
-      for compaction.
-    * mode='mor' (merge-on-read, the streaming default): each batch writes
-      ONLY its own rows as bucket-partitioned delta files — no table read,
-      no sort; cost is O(batch) regardless of table size (a 100 TB table
-      cannot be rewritten per micro-batch). LWW resolves at read time
-      (resolve_lww over base+deltas) and at compaction, which runs the COW
-      path over everything once every `compact_every` batches to bound
-      read amplification. Iceberg v2 / Hudi / Paimon MoR is this design.
+    One ingest path, merge-on-read: each batch (merge_parsed) writes ONLY
+    its own parsed rows as a status-partitioned delta — no table read,
+    no sort; cost is O(batch) regardless of table size. LWW resolves at
+    read time (resolve_lww over base+deltas) and at compaction, which
+    folds the backlog every `compact_every` batches to bound read
+    amplification (compact_every=1, major_every=1 rewrites the touched
+    base buckets after every batch). Iceberg v2 / Hudi / Paimon MoR is
+    this design.
     """
 
     def __init__(
@@ -240,7 +235,7 @@ class ParquetLake:
         spark: SparkSession,
         table_dir: str,
         n_buckets: int = 32,
-        mode: str = "cow",
+        mode: str = "mor",
         compact_every: int | None = 10,
         tombstone_horizon_lsn: int | None = None,
         broadcast_delta_bytes: int = 32 * 1024 * 1024,
@@ -251,12 +246,13 @@ class ParquetLake:
         snapshot_retention: int = SNAPSHOT_RETENTION,
         route_stable_keys: bool = True,
     ):
-        if mode not in ("cow", "mor"):
+        # merge-on-read is the only table mode; the argument survives for
+        # callers that spell it out
+        if mode != "mor":
             raise ValueError(f"unknown lake mode: {mode}")
         self.spark = spark
         self.table_dir = table_dir
         self.n_buckets = n_buckets
-        self.mode = mode
         # compact_every=None disables INLINE compaction entirely — the
         # decoupled deployment mode where a separate maintenance process
         # calls compact_now() while the ingest job only appends deltas
@@ -773,25 +769,6 @@ class ParquetLake:
         ]
         return T.StructType(fields)
 
-    def _read_buckets(self, meta: dict, buckets: list[int], extra_cols: list[str]) -> DataFrame:
-        """Base rows of the given buckets. Each bucket dir is a partitioned
-        root with route=R subdirs — partition discovery recovers `route`
-        as a column (and a route predicate on the result prunes at the
-        directory level)."""
-        paths = [
-            os.path.join(self.table_dir, meta["buckets"][str(b)])
-            for b in buckets
-            if str(b) in meta["buckets"]
-        ]
-        df = self._read_bucket_tree(paths)
-        if df is None:
-            return self.spark.createDataFrame([], self._row_schema(extra_cols))
-        df = self._route_as_string(df)
-        for c in [ROUTE_COL, *extra_cols]:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast("string"))
-        return df.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-
     def _read_bucket_tree(self, paths: list[str]):
         """Bucket dirs (possibly spanning several snapshots) -> one
         DataFrame. Bucket dirs are `__bucket=B` roots holding `route=R`
@@ -848,341 +825,6 @@ class ParquetLake:
                 raise  # rows WERE written; the failure is something else
             return defaults
 
-    def merge(
-        self,
-        changes: DataFrame,
-        batch_id,
-        input_persisted: bool = False,
-        side_summary: DataFrame | None = None,
-    ) -> dict:
-        """Idempotent MERGE of one batch of change rows (columns KEY_COLS +
-        order.CARRY_COLS). The batch may contain MULTIPLE rows per key —
-        the merge aggregation's per-key max_by over union(target, batch)
-        resolves last-writer-wins inline (max is associative), so callers
-        need not pre-deduplicate. Returns commit stats.
-
-        input_persisted=True: the caller already holds `changes` (or its
-        lineage) resident; skip the internal persist. The merge runs two
-        actions over the batch (bucket/extras summary collect + the COW
-        rewrite), so unpersisted input would pay its compute twice.
-
-        side_summary: optional small aggregate DataFrame (e.g. per-partition
-        lineage) to ride along in the merge's summary job — one Spark job
-        instead of two; its rows come back in stats["side_rows"]. Streaming
-        uses this so a micro-batch costs exactly TWO jobs (summary+lineage
-        collect, then the COW write).
-        """
-        from pyspark import StorageLevel
-
-        meta = self.current_meta() or self._empty_meta()
-        if self._batch_applied(meta, batch_id):
-            return {"status": "skipped_duplicate_batch", "batch_id": batch_id}
-
-        src = changes.withColumn(BUCKET_COL, bucket_expr(self.n_buckets))
-        if input_persisted:
-            return self._merge_impl(src, batch_id, meta, side_summary)
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return self._merge_impl(src, batch_id, meta, side_summary)
-        finally:
-            src.unpersist()
-
-    def _merge_impl(
-        self, src: DataFrame, batch_id, meta: dict, side_summary: DataFrame | None = None
-    ) -> dict:
-        t0 = time.monotonic()
-        # One scalable pass: touched buckets + observed open-world keys
-        # (explode multiplies by ~#extras per row; hash-agg partial-combines
-        # down to <= n_buckets * n_keys rows before the collect). An optional
-        # caller aggregate (lineage) is unioned in so it shares the job.
-        summary_df = (
-            src.select(
-                BUCKET_COL, F.col(ROUTE_COL),
-                F.explode_outer(F.map_keys("extras")).alias("_k"),
-            )
-            .groupBy(BUCKET_COL, ROUTE_COL, "_k")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .withColumn("_side", F.lit("merge"))
-        )
-        if side_summary is not None:
-            summary_df = summary_df.unionByName(
-                side_summary.withColumn("_side", F.lit("side")),
-                allowMissingColumns=True,
-            )
-        rows = summary_df.collect()
-        summary = [r for r in rows if r["_side"] == "merge"]
-        side_rows = [r for r in rows if r["_side"] == "side"]
-        t_summary = time.monotonic() - t0
-        touched = sorted({r[BUCKET_COL] for r in summary})
-        batch_pairs = {(r[BUCKET_COL], r[ROUTE_COL]) for r in summary}
-        observed_keys = sorted(
-            {r["_k"] for r in summary if r["_k"] is not None}
-            - RESERVED_COLS
-        )
-        if not touched:
-            committed = self._commit_with_rebase(
-                meta, lambda m: None if self._batch_applied(m, batch_id)
-                else dict(self._with_batch(m, batch_id),
-                          id=m["id"] + 1, parent=m["id"]))
-            status = ("empty_batch" if committed is not None
-                      else "skipped_duplicate_batch")
-            return {"status": status, "batch_id": batch_id,
-                    "side_rows": side_rows}
-
-        # Additive schema evolution: union of stored and observed columns.
-        extra_cols = list(meta["extra_columns"])
-        for k in observed_keys:
-            if k not in extra_cols:
-                extra_cols.append(k)
-
-        src_flat = src.select(
-            *KEY_COLS,
-            *[F.col(c) for c in DOMAIN_COLS if c not in KEY_COLS],
-            F.col(ROUTE_COL),
-            *[F.element_at(F.col("extras"), k).alias(k) for k in extra_cols],
-            F.col(LSN_COL),
-            F.col(TX_COL),
-            F.col(TS_COL),
-            F.col(OFFSET_COL),
-            (F.col("effective_op") == "d").alias(DELETED_COL),
-            F.col(BUCKET_COL),
-        )
-        # Deleted rows keep the key + lsn only (tombstone): null out payload
-        # so a tombstone never leaks stale content.
-        payload_cols = [c for c in DOMAIN_COLS if c not in KEY_COLS] + extra_cols
-        for c in payload_cols:
-            src_flat = src_flat.withColumn(
-                c, F.when(F.col(DELETED_COL), F.lit(None).cast("string")).otherwise(F.col(c))
-            )
-        # minhash_bands: signatures are NOT computed here — the post-LWW
-        # fill (fill_band_columns, applied after every resolve) signs only
-        # the rows that win, so losing versions never pay the shingle cost.
-
-        stats = {
-            "status": "committed",
-            "batch_id": batch_id,
-            "touched_buckets": len(touched),
-            "new_columns": [k for k in observed_keys if k not in meta["extra_columns"]],
-            "summary_sec": round(t_summary, 3),
-            "side_rows": side_rows,
-        }
-        if self.mode == "mor":
-            new_meta = self._merge_mor(
-                src_flat, touched, batch_pairs, extra_cols, meta, batch_id, stats
-            )
-        else:
-            new_meta = self._merge_cow(
-                src_flat, touched, batch_pairs, extra_cols, meta, batch_id, stats
-            )
-        stats["snapshot"] = new_meta["id"]
-        return stats
-
-    def _merge_cow(
-        self, src_flat: DataFrame, touched, batch_pairs, extra_cols,
-        # batch_pairs is CONSUMED only by the MoR path (write-layout
-        # repartition); it rides here for the shared dispatch signature
-        meta: dict, batch_id, stats: dict,
-    ) -> dict:
-        """Union touched base buckets with the batch, resolve LWW, rewrite
-        those buckets."""
-        for _ in range(3):
-            if not meta.get("deltas"):
-                break
-            # COW over a table with pending MoR deltas: fold them into the
-            # base first so the bucket rewrite below sees every version.
-            # _compact may abort under a concurrent-writer conflict and
-            # return the fresh manifest (possibly with NEW deltas) — retry
-            # the fold on that; COW correctness requires a delta-free base.
-            meta = self._compact(meta, full=self.full_major)
-        if meta.get("deltas"):
-            raise RuntimeError(
-                "COW merge could not clear the delta backlog: concurrent "
-                "writers keep advancing the table (COW mode expects a "
-                "single writer; use mode='mor' for concurrent ingest)"
-            )
-
-        tgt = self._read_buckets(meta, touched, extra_cols)
-        tgt = tgt.unionByName(src_flat, allowMissingColumns=True)
-        # Single-exchange merge (resolve_lww_clustered): hash straight to
-        # ~one partition per touched bucket; the LWW aggregation and the
-        # dynamic-partition write below share that stage, so each leaf dir
-        # is written by exactly the task that owns its bucket (no second
-        # exchange, no AQE-coalesced fat writers fanning out to all
-        # leaves, and no partial-agg pass — base rows are one-per-key, so
-        # map-side combining never reduces anything here).
-        merged = resolve_lww_clustered(tgt, max(len(touched), 1))
-        if self.minhash_bands:
-            # post-LWW signing: only unsigned winners (new versions that
-            # beat their base row) pay the shingle cost — same stage as
-            # the write, no extra exchange
-            merged = fill_band_columns(merged)
-
-        data_rel = self._new_data_rel("s", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
-
-        # The rewritten buckets and their route lists ride the rewrite's
-        # own job (Observation): the distinct (bucket, route) pair set is
-        # O(touched x routes) — tiny — where the previous post-write
-        # os.listdir + per-bucket walk was O(rewritten files) on the
-        # driver.
-        from pyspark.sql import Observation
-
-        obs = Observation(f"merge_cow_{batch_id}")
-        merged = merged.observe(
-            obs,
-            F.collect_set(
-                F.struct(
-                    F.col(BUCKET_COL).cast("string").alias("b"),
-                    F.col(ROUTE_COL).alias("r"),
-                )
-            ).alias("pairs"),
-        )
-
-        t0 = time.monotonic()
-        merged.write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        stats["write_sec"] = round(time.monotonic() - t0, 3)
-        pairs = self._obs_get(obs, out_dir, pairs=[])["pairs"] or []
-
-        written = {int(p["b"]) for p in pairs}
-        routes_by_bucket: dict[str, set] = {}
-        for p in pairs:
-            if p["r"] is not None:
-                routes_by_bucket.setdefault(p["b"], set()).add(p["r"])
-
-        def build(m: dict) -> dict | None:
-            if self._batch_applied(m, batch_id):
-                return None  # a concurrent writer applied this batch
-            self._check_writer_modulus(m)
-            # The rewrite read meta's touched buckets and assumed a
-            # delta-free table; a concurrent commit that repointed any of
-            # them (or appended deltas) invalidates the output. Only
-            # metadata-neutral concurrent commits (empty batches) can be
-            # rebased over — COW is the single-writer batch mode.
-            if [d["path"] if isinstance(d, dict) else d
-                    for d in m.get("deltas", [])] != \
-               [d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])] or any(
-                    m["buckets"].get(str(b)) != meta["buckets"].get(str(b))
-                    for b in touched):
-                raise RuntimeError(
-                    "COW merge conflicts with a concurrent data commit "
-                    "(COW mode expects a single writer; use mode='mor' "
-                    "for concurrent ingest + decoupled compaction)"
-                )
-            new_buckets = dict(m["buckets"])
-            bucket_routes = dict(m.get("bucket_routes", {}))
-            for b in touched:
-                if b in written:
-                    new_buckets[str(b)] = os.path.join(
-                        data_rel, f"{BUCKET_COL}={b}"
-                    )
-                    bucket_routes[str(b)] = sorted(
-                        routes_by_bucket.get(str(b), set())
-                    )
-                else:
-                    new_buckets.pop(str(b), None)
-                    bucket_routes.pop(str(b), None)
-            cols = list(m["extra_columns"])
-            cols += [c for c in extra_cols if c not in cols]
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": cols,
-                "buckets": new_buckets,
-                "bucket_routes": bucket_routes,
-                "deltas": m.get("deltas", []),
-                **{k: v for k, v in self._with_batch(m, batch_id).items()
-                   if k in ("batch_wm", "recent_batch_ids")},
-            }
-
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:  # duplicate batch won the race: drop our write
-            shutil.rmtree(out_dir, ignore_errors=True)
-            stats["status"] = "skipped_duplicate_batch"
-            return self.current_meta()
-        # COW is the one commit path that never reaches a compaction, so
-        # it must run its own retention: every merge rewrites bucket dirs
-        # and commits a snapshot, and without this a long-running COW
-        # table accumulates manifests AND superseded bucket generations
-        # without bound (the expire docstring's "bounds disk growth of
-        # the long-running tail job" was only true for MoR).
-        self.expire_snapshots(keep_last=self.snapshot_retention)
-        return new_meta
-
-    def _merge_mor(
-        self, src_flat: DataFrame, touched, batch_pairs, extra_cols,
-        meta: dict, batch_id, stats: dict,
-    ) -> dict:
-        """Append the batch as bucket-partitioned delta files — O(batch),
-        no table read, no sort. LWW resolves at read/compaction; compaction
-        (the COW aggregation over base + all deltas) runs every
-        `compact_every` batches to bound read amplification."""
-        from pyspark.sql import Observation
-
-        data_rel = self._new_data_rel("d", meta)
-        out_dir = os.path.join(self.table_dir, data_rel)
-
-        # Route list for manifest-level tenant pruning rides the delta
-        # write itself (no post-write directory walk).
-        obs = Observation(f"merge_mor_{batch_id}")
-        src_flat = src_flat.observe(
-            obs, F.collect_set(F.col(ROUTE_COL)).alias("routes")
-        )
-
-        t0 = time.monotonic()
-        # one task per (bucket, route) leaf the batch actually touches
-        src_flat.repartition(
-            max(len(batch_pairs), 1), F.col(BUCKET_COL), F.col(ROUTE_COL)
-        ).write.partitionBy(BUCKET_COL, ROUTE_COL).mode("overwrite").parquet(out_dir)
-        stats["write_sec"] = round(time.monotonic() - t0, 3)
-
-        delta_entry = {
-            "path": data_rel, "format": "flat",
-            "routes": sorted(
-                self._obs_get(obs, out_dir, routes=[])["routes"] or []
-            ),
-            "buckets": sorted(int(b) for b in touched),
-            "bytes": self._tree_bytes(out_dir),
-        }
-
-        def build(m: dict) -> dict | None:
-            if self._batch_applied(m, batch_id):
-                return None  # a concurrent writer applied this batch
-            self._check_writer_modulus(m)
-            cols = list(m["extra_columns"])
-            cols += [c for c in extra_cols if c not in cols]
-            return {
-                "id": m["id"] + 1,
-                "parent": m["id"],
-                "n_buckets": self.n_buckets,
-                "minhash_bands": self.minhash_bands,
-                "extra_columns": cols,
-                "buckets": dict(m["buckets"]),
-                "bucket_routes": dict(m.get("bucket_routes", {})),
-                "minor_count": m.get("minor_count", 0),
-                "deltas": m.get("deltas", []) + [delta_entry],
-                **{k: v for k, v in self._with_batch(m, batch_id).items()
-                   if k in ("batch_wm", "recent_batch_ids")},
-            }
-
-        # batch durable before compaction; a delta append rebases over ANY
-        # concurrent commit (compaction folds consume only deltas already
-        # in the manifest they read, never this not-yet-committed one)
-        new_meta = self._commit_with_rebase(meta, build)
-        if new_meta is None:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            stats["status"] = "skipped_duplicate_batch"
-            return self.current_meta()
-
-        if (self.compact_every is not None
-                and self._raw_delta_count(new_meta) >= self.compact_every):
-            t0 = time.monotonic()
-            new_meta = self._maybe_compact(new_meta)
-            stats["compact_sec"] = round(time.monotonic() - t0, 3)
-        return new_meta
-
     def merge_parsed(self, parsed: DataFrame, batch_id) -> dict:
         """ONE-JOB, ZERO-SHUFFLE merge-on-read ingest of a full parsed
         micro-batch (the streaming hot path): the parsed rows — ALL
@@ -1194,7 +836,7 @@ class ParquetLake:
         with no exchange at all. (The previous design shuffled the batch
         onto the bucket before writing — but nothing ever consumes deltas
         per bucket: read and compaction scan them whole, and only the
-        compacted BASE needs bucket separation for COW rewrites. Dropping
+        compacted BASE needs bucket separation for subset folds. Dropping
         that shuffle measured 2.2x on a 2M-event batch; the earlier
         summary-collect job, which re-paid the entire JSON parse, was
         another 2x. File count per delta = O(source tasks x statuses),
@@ -1208,11 +850,12 @@ class ParquetLake:
         assignment, and LWW tombstone-nulling move to read/compaction
         time, where the manifest already knows every observed column.
 
-        Requires mode='mor'. Idempotent per batch_id like merge()."""
+        The batch may contain MULTIPLE rows per key (LWW resolves at
+        read/compaction; max is associative, so callers need not
+        pre-deduplicate). Idempotent per batch_id: a replayed epoch
+        returns status 'skipped_duplicate_batch'."""
         from pyspark.sql import Observation
 
-        if self.mode != "mor":
-            raise ValueError("merge_parsed requires mode='mor'")
         t_enter = time.monotonic()
         meta = self.current_meta() or self._empty_meta()
         if self._batch_applied(meta, batch_id):
@@ -1371,10 +1014,7 @@ class ParquetLake:
         """Deltas appended since the last compaction of any kind — the
         product of a MINOR fold (merged=True) does not re-trigger
         compaction by itself."""
-        return sum(
-            1 for d in meta.get("deltas", [])
-            if not (isinstance(d, dict) and d.get("merged"))
-        )
+        return sum(1 for d in meta.get("deltas", []) if not d.get("merged"))
 
     def _maybe_compact(self, meta: dict) -> dict:
         """Tiered compaction policy: MAJOR (fold into the base) when no
@@ -1410,11 +1050,7 @@ class ParquetLake:
         # backlog would otherwise plan ~10^5 shuffle partitions and
         # write tasks, ~all empty — the partition COUNT is independent
         # of the bucket VALUES, so any count is winner-exact
-        touched_minor = self._delta_touched_buckets(meta)
-        n_parts = (
-            max(len(touched_minor), 1) if touched_minor is not None
-            else self.n_buckets
-        )
+        n_parts = max(len(self._delta_touched_buckets(meta)), 1)
         merged = resolve_lww_clustered(
             delta.withColumn(BUCKET_COL, bucket_expr(self.n_buckets)),
             n_parts,
@@ -1466,17 +1102,14 @@ class ParquetLake:
         # doesn't matter); abort if a concurrent COMPACTION already
         # consumed any input (our fold is then stale duplicate work —
         # dropping it is exact because the table never referenced it).
-        consumed = {d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])}
+        consumed = {d["path"] for d in meta.get("deltas", [])}
 
         def build(m: dict) -> dict | None:
             if (m.get("n_buckets") or self.n_buckets) != self.n_buckets:
                 return None  # rebucketed underneath: this fold's output
                 # (bucket lists, dirs) is hashed with the OLD modulus —
                 # abort; the rebucket already folded the whole backlog
-            m_paths = {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
-            if not consumed <= m_paths:
+            if not consumed <= {d["path"] for d in m.get("deltas", [])}:
                 return None
             out = {
                 **{k: v for k, v in m.items()},
@@ -1484,8 +1117,7 @@ class ParquetLake:
                 "parent": m["id"],
                 "deltas": folded + [
                     d for d in m.get("deltas", [])
-                    if (d["path"] if isinstance(d, dict) else d)
-                    not in consumed
+                    if d["path"] not in consumed
                 ],
                 "minor_count": m.get("minor_count", 0) + 1,
             }
@@ -1508,35 +1140,28 @@ class ParquetLake:
     @staticmethod
     def _delta_touched_buckets(
         meta: dict, route: str | None = None
-    ) -> list[int] | None:
+    ) -> list[int]:
         """Union of the manifest's per-delta touched-bucket lists — the
-        base buckets a MAJOR fold must read. None when any delta entry
-        predates bucket tracking (legacy manifest): the safe fallback is
-        a full-table major, exactly the pre-subset behavior.
+        base buckets a MAJOR fold must read.
 
         route=X keeps only deltas whose manifest route list contains X
         (the same pruning _read_split applies to the delta scan), so a
         tenant-scoped subset read joins only the buckets touched by the
         TENANT'S own backlog — a bucket churned exclusively by other
-        tenants streams through the tenant's read join-free. Route-pruned
-        deltas are skipped BEFORE the legacy check: a delta whose rows
-        never enter the merge cannot need a fallback on their account."""
-        out: set[int] = set()
-        for d in meta.get("deltas", []):
-            if not ParquetLake._delta_matches_route(d, route):
-                continue
-            if not isinstance(d, dict) or "buckets" not in d:
-                return None
-            out.update(int(b) for b in d["buckets"])
-        return sorted(out)
+        tenants streams through the tenant's read join-free."""
+        return sorted({
+            int(b)
+            for d in meta.get("deltas", [])
+            if ParquetLake._delta_matches_route(d, route)
+            for b in d["buckets"]
+        })
 
     def _compact(self, meta: dict, full: bool = False) -> dict:
         """MAJOR compaction: fold the outstanding deltas into the base and
         drop the delta list. SUBSET major (the default): only the base
         buckets the deltas actually touch — recorded per delta at commit
         time, no re-scan — are read and rewritten; untouched buckets are
-        carried forward by manifest reference, exactly as _merge_cow
-        already carries untouched buckets. LWW associativity makes the
+        carried forward by manifest reference. LWW associativity makes the
         subset fold exact: an untouched bucket has NO delta versions, so
         max over (that bucket ∪ ∅) is the bucket unchanged. This makes
         the recurring major cost O(touched base + backlog), not O(table)
@@ -1551,9 +1176,8 @@ class ParquetLake:
         is purely an optimization (an expired tombstone is never WRONG to
         keep, it just occupies space until its bucket is next touched).
 
-        full=True (and any legacy manifest whose deltas predate bucket
-        tracking) folds every bucket — the pre-subset behavior, kept for
-        equivalence testing and as the migration fallback."""
+        full=True folds every bucket — the pre-subset behavior, kept for
+        equivalence testing and as an operational escape hatch."""
         from pyspark.sql import Observation
 
         extra_cols = list(meta["extra_columns"])
@@ -1629,8 +1253,7 @@ class ParquetLake:
         # concurrent compaction consumed any input delta or repointed any
         # base bucket the fold read: the output is then built on stale
         # inputs and is simply dropped (never referenced, so exact).
-        consumed = {d["path"] if isinstance(d, dict) else d
-                    for d in meta.get("deltas", [])}
+        consumed = {d["path"] for d in meta.get("deltas", [])}
         read_buckets = (list(meta["buckets"]) if touched is None
                         else [str(b) for b in touched])
 
@@ -1639,9 +1262,7 @@ class ParquetLake:
                 return None  # rebucketed underneath: the fold's buckets
                 # are hashed with the OLD modulus — abort (exact: the
                 # rebucket consumed every delta this fold read)
-            m_paths = {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
-            if not consumed <= m_paths:
+            if not consumed <= {d["path"] for d in m.get("deltas", [])}:
                 return None
             if any(m["buckets"].get(b) != meta["buckets"].get(b)
                    for b in read_buckets):
@@ -1686,8 +1307,7 @@ class ParquetLake:
                 "bucket_routes": bucket_routes,
                 "deltas": [
                     d for d in m.get("deltas", [])
-                    if (d["path"] if isinstance(d, dict) else d)
-                    not in consumed
+                    if d["path"] not in consumed
                 ],
                 **{k: v for k, v in m.items()
                    if k in ("batch_wm", "recent_batch_ids", "batch_ids")},
@@ -1724,10 +1344,9 @@ class ParquetLake:
         meta = self.current_meta() or {}
         parts = []
         for d in meta.get("deltas", []):
-            entry = d if isinstance(d, dict) else {"path": d, "format": "flat"}
-            if entry.get("format") != "parsed":
+            if d["format"] != "parsed":
                 continue  # folded deltas hold only ok rows
-            dp = os.path.join(self.table_dir, entry["path"])
+            dp = os.path.join(self.table_dir, d["path"])
             df = (
                 self.spark.read.option("mergeSchema", "true")
                 .option("basePath", dp).parquet(dp)
@@ -1863,7 +1482,7 @@ class ParquetLake:
             for p in m.get("buckets", {}).values():
                 referenced.add(p.split(os.sep + BUCKET_COL + "=", 1)[0])
             for d in m.get("deltas", []):
-                referenced.add(d["path"] if isinstance(d, dict) else d)
+                referenced.add(d["path"])
 
         removed_dirs = 0
         data_root = os.path.join(self.table_dir, "data")
@@ -1921,7 +1540,7 @@ class ParquetLake:
         the NEW bucket modulus, flipping the manifest's n_buckets in the
         same atomic commit. A creation-time bucket count is the one
         layout decision that goes stale as a lake grows 1000x: at 10^10
-        events, 64 buckets means ~1.5 TB per bucket — every COW rewrite,
+        events, 64 buckets means ~1.5 TB per bucket — every MoR read,
         subset fold, and point lookup degrades with it. rebucket() is the
         planned full-table maintenance op (run rarely, from the
         decoupled maintenance process) that resets that decision without
@@ -2097,7 +1716,7 @@ class ParquetLake:
     ):
         """(base, delta) DataFrames, either possibly None, both normalized
         to the full row schema. Base rows are UNIQUE per key (every base
-        writer — COW merge and compaction — is a resolve_lww output);
+        writer — major fold and rebucket — is a resolve_lww output);
         deltas hold multi-version rows. Base bucket paths are bucket dirs
         (route-partitioned roots) while delta paths are their own
         partitioned ROOTS, so they are read separately (mixing both in one
@@ -2118,16 +1737,13 @@ class ParquetLake:
         def delta_has_route(d: dict) -> bool:
             return self._delta_matches_route(d, route)
 
-        deltas = [
-            d if isinstance(d, dict) else {"path": d, "format": "flat"}
-            for d in meta.get("deltas", [])
-        ]
         base = self._read_base(meta, extra_cols, route=route, bucket_set=bucket_set)
 
         # each delta is its own partitioned root — read separately (several
-        # partitioned roots in one load trip partition discovery)
+        # partitioned roots in one load trip partition discovery): raw
+        # ingest deltas are parsed-format, minor-fold outputs are flat
         delta_parts = []
-        for d in deltas:
+        for d in meta.get("deltas", []):
             if not delta_has_route(d):
                 continue
             dp = os.path.join(self.table_dir, d["path"])
@@ -2152,21 +1768,6 @@ class ParquetLake:
             delta = self._normalize_rows(delta, extra_cols)
         return base, delta
 
-    def _read_all(
-        self, meta: dict, extra_cols: list[str], route: str | None = None
-    ) -> DataFrame:
-        """All row versions (base + deltas) as one DataFrame."""
-        base, delta = self._read_split(meta, extra_cols, route=route)
-        if base is None and delta is None:
-            return self.spark.createDataFrame(
-                [], self._row_schema(extra_cols)
-            ).drop(BUCKET_COL)
-        if base is None:
-            return delta
-        if delta is None:
-            return base
-        return base.unionByName(delta, allowMissingColumns=True)
-
     def _tree_bytes(self, path: str) -> int:
         """Total file bytes under a path via the Hadoop FileSystem's
         getContentSummary — ONE filesystem call whose recursion runs
@@ -2190,19 +1791,12 @@ class ParquetLake:
         tenant read's broadcast-vs-aggregate switch is sized by the
         tenant's own backlog, not the whole table's. Commits record each
         delta's byte count in its manifest entry (ok-partition only for
-        parsed deltas — dead letters never merge), so the steady-state
-        read sums a handful of manifest integers; a walk happens only for
-        legacy entries without the field."""
-        total = 0
-        for d in meta.get("deltas", []):
-            if not self._delta_matches_route(d, route):
-                continue
-            if isinstance(d, dict) and "bytes" in d:
-                total += d["bytes"]
-                continue
-            p = os.path.join(self.table_dir, d["path"] if isinstance(d, dict) else d)
-            total += self._tree_bytes(p)
-        return total
+        parsed deltas — dead letters never merge), so the read sums a
+        handful of manifest integers and never walks a tree."""
+        return sum(
+            d["bytes"] for d in meta.get("deltas", [])
+            if self._delta_matches_route(d, route)
+        )
 
     @staticmethod
     def _delta_matches_route(d, route: str | None) -> bool:
@@ -2210,7 +1804,7 @@ class ParquetLake:
         without a route list (pre-route manifest) matches every route."""
         if route is None:
             return True
-        routes = d.get("routes") if isinstance(d, dict) else None
+        routes = d.get("routes")
         return routes is None or route in routes
 
     def _read_mor_subset(
@@ -2349,27 +1943,21 @@ class ParquetLake:
             # lists) before any scan is constructed: small backlog (the
             # steady state between compactions) => broadcast key-set join
             # against ONLY the delta-touched buckets, untouched buckets
-            # stream through join-free (_read_mor_subset; legacy manifests
-            # without bucket lists fall back to the whole-base broadcast
-            # join); large backlog (or no base) => the global LWW
-            # aggregate.
+            # stream through join-free (_read_mor_subset); large backlog
+            # (or no base) => the global LWW aggregate.
             # migration-exact tenant reads size and prune the delta side
             # WITHOUT the route (any route's newer version can evict this
             # tenant's key) and filter winners on route afterwards
             migration_exact = route is not None and not self.route_stable_keys
             prune_route = None if migration_exact else route
-            touched = (
-                self._delta_touched_buckets(meta, route=prune_route)
-                if meta.get("deltas") and meta["buckets"]
-                else None
-            )
             if (
-                touched is not None
+                meta.get("deltas") and meta["buckets"]
                 and self._delta_bytes(meta, route=prune_route)
                 <= self.broadcast_delta_bytes
             ):
                 df, unsigned_possible = self._read_mor_subset(
-                    meta, extra_cols, route, touched,
+                    meta, extra_cols, route,
+                    self._delta_touched_buckets(meta, route=prune_route),
                     migration_exact=migration_exact,
                 )
             else:
@@ -2388,11 +1976,6 @@ class ParquetLake:
                     df = base  # compacted table: plain pruned scan, no agg
                 elif base is None:
                     df = resolve_lww(delta)
-                elif (
-                    self._delta_bytes(meta, route=prune_route)
-                    <= self.broadcast_delta_bytes
-                ):
-                    df = self._merge_read_broadcast(base, delta)
                 else:
                     df = resolve_lww(
                         base.unionByName(delta, allowMissingColumns=True)
@@ -2461,7 +2044,7 @@ class ParquetLake:
           PushedFilters, skipping row groups within the bucket);
         * outstanding deltas are manifest-pruned by their touched-bucket
           lists: a delta whose backlog cannot contain the key's bucket is
-          never read (legacy entries without bucket lists stay in);
+          never read;
         * LWW resolves over the surviving handful of rows — max over the
           key's base row and its delta versions, the same associativity
           argument as every other read path.
@@ -2525,11 +2108,8 @@ class ParquetLake:
         wanted = sorted(wset)
         sub = dict(meta)
         sub["deltas"] = [
-            d
-            for d in meta.get("deltas", [])
-            if not isinstance(d, dict)
-            or "buckets" not in d
-            or not wset.isdisjoint(int(x) for x in d["buckets"])
+            d for d in meta.get("deltas", [])
+            if not wset.isdisjoint(int(x) for x in d["buckets"])
         ]
         base, delta = self._read_split(sub, extra_cols, buckets=wanted)
 
@@ -2628,16 +2208,10 @@ class ParquetLake:
         empty-batch commit changes nothing. The union of the returned
         entries' files therefore holds exactly the row versions written
         in the range, each once."""
-        prev = {
-            d["path"] if isinstance(d, dict) else d
-            for d in (from_meta or {}).get("deltas", [])
-        }
+        prev = {d["path"] for d in (from_meta or {}).get("deltas", [])}
         entries: list[dict] = []
         for m in chain:
-            deltas = [
-                d if isinstance(d, dict) else {"path": d, "format": "flat"}
-                for d in m.get("deltas", [])
-            ]
+            deltas = m.get("deltas", [])
             cur = {d["path"] for d in deltas}
             removed = prev - cur
             if not removed:
@@ -2700,18 +2274,7 @@ class ParquetLake:
         contribute nothing) + O(changed-bucket subset of the FROM
         snapshot) to classify against prior state, pruned by the same
         manifest bucket lists as every other subset read. Small ranges
-        broadcast; large ranges fall back to a shuffle join.
-
-        Requires mode='mor' (data commits must appear in the delta log;
-        a COW data commit rewrites buckets in place and leaves no
-        per-commit row trail — Iceberg's incremental read has the same
-        append/delta-only restriction)."""
-        if self.mode != "mor":
-            raise ValueError(
-                "read_changes requires mode='mor': COW data commits "
-                "rewrite buckets in place and leave no per-commit delta "
-                "trail to extract changes from"
-            )
+        broadcast; large ranges fall back to a shuffle join."""
         cur = self.current_meta()
         if to_snapshot_id is None:
             if cur is None:
@@ -2770,24 +2333,15 @@ class ParquetLake:
             if not entries:
                 return empty
 
-        # -- winning version per key changed in the range: O(range bytes)
-        parts = []
-        for d in entries:
-            dp = os.path.join(self.table_dir, d["path"])
-            if d.get("format") == "parsed":
-                parts.append(
-                    self._flatten_parsed_delta(
-                        dp, extra_cols, route=prune_route
-                    )
-                )
-            else:
-                flat = (
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(dp)
-                )
-                if prune_route is not None and ROUTE_COL in flat.columns:
-                    flat = flat.filter(F.col(ROUTE_COL) == prune_route)
-                parts.append(self._route_as_string(flat))
+        # -- winning version per key changed in the range: O(range bytes);
+        # every range entry is a raw ingest delta (parsed format)
+        parts = [
+            self._flatten_parsed_delta(
+                os.path.join(self.table_dir, d["path"]), extra_cols,
+                route=prune_route,
+            )
+            for d in entries
+        ]
         versions = parts[0]
         for p in parts[1:]:
             versions = versions.unionByName(p, allowMissingColumns=True)
@@ -2817,16 +2371,16 @@ class ParquetLake:
 
         # -- prior state of the changed keys, read from ONLY the buckets
         # the range touched (under the FROM snapshot's modulus). When no
-        # fold/rebucket in the range changed the modulus and every entry
-        # carries a bucket list, the union of the manifest lists IS the
-        # touched set (zero extra jobs); otherwise recompute the buckets
-        # of the changed keys with the engine's own bucket expression —
-        # one tiny job over the O(changes) winners, collecting <= n_A ints.
+        # rebucket in the range changed the modulus, the union of the
+        # manifest lists IS the touched set (zero extra jobs); otherwise
+        # recompute the buckets of the changed keys with the engine's own
+        # bucket expression — one tiny job over the O(changes) winners,
+        # collecting <= n_A ints.
         n_a = from_meta.get("n_buckets") or self.n_buckets
         same_modulus = all(
             (m.get("n_buckets") or self.n_buckets) == n_a for m in chain
         )
-        if same_modulus and all("buckets" in d for d in entries):
+        if same_modulus:
             wset = {int(b) for d in entries for b in d["buckets"]}
         else:
             wset = {
@@ -2838,9 +2392,7 @@ class ParquetLake:
         sub = dict(from_meta)
         sub["deltas"] = [
             d for d in from_meta.get("deltas", [])
-            if not isinstance(d, dict)
-            or "buckets" not in d
-            or not wset.isdisjoint(int(b) for b in d["buckets"])
+            if not wset.isdisjoint(int(b) for b in d["buckets"])
         ]
         base, delta = self._read_split(
             sub, extra_cols, route=prune_route, buckets=sorted(wset)
@@ -2872,11 +2424,7 @@ class ParquetLake:
         # O(changes). Semi-prune prior down to the changed keys first;
         # small ranges (manifest byte counts, the read() switch) broadcast
         # both sides of the probe — the base-side scan never shuffles.
-        small = (
-            sum(int(d.get("bytes", self.broadcast_delta_bytes + 1))
-                for d in entries)
-            <= self.broadcast_delta_bytes
-        )
+        small = sum(d["bytes"] for d in entries) <= self.broadcast_delta_bytes
         wkeys = winners.select(*KEY_COLS)
         if small:
             wkeys = F.broadcast(wkeys)

@@ -93,9 +93,8 @@ def main() -> int:
         must_not=["BatchEvalPython", "SortAggregate", "Window", "Exchange"],
     )
 
-    # 3. fused LWW + MERGE aggregation (COW merge / MoR read+compaction —
-    # the one-key-shuffle claim)
-    lake = ParquetLake(spark, os.path.join(work, "lake"), n_buckets=16)
+    # 3. fused LWW + MERGE aggregation (the per-key max_by that MoR reads
+    # and folds run — the one-key-shuffle claim)
     src = (
         parsed.filter(F.col("status") == "ok")
         .select(*KEY_COLS, *CARRY_COLS)
@@ -138,7 +137,8 @@ def main() -> int:
     )
 
     # 4. filter pushdown + column pruning on the lake read path
-    final = lake_read_plan_df(spark, lake, parsed, src)
+    lake = ParquetLake(spark, os.path.join(work, "lake"), n_buckets=16)
+    final = lake_read_plan_df(lake, raw)
     check(
         "lake point-lookup (pushdown + pruning)",
         formatted(final),
@@ -525,11 +525,15 @@ def main() -> int:
     return 1 if failures else 0
 
 
-def lake_read_plan_df(spark, lake, parsed, src):
-    """Materialize a tiny lake then build the Q13-style point lookup."""
+def lake_read_plan_df(lake, raw):
+    """Materialize a tiny lake (one ingest batch folded into the base by
+    a major compaction) then build the Q13-style point lookup."""
     from pyspark.sql import functions as F
 
-    lake.merge(src, 0, input_persisted=False)
+    from pyspark_cdc.stream import process_batch
+
+    process_batch(raw, 0, lake)
+    lake.compact_now(tier="major")
     return (
         lake.read()
         .filter((F.col("repo") == "org1/proj") & F.col("path").startswith("src/"))

@@ -6,9 +6,9 @@ a key's versions live only in its key-hash bucket plus the deltas whose
 manifest bucket list contains that bucket, so a point read should list
 ONE base bucket dir (a batched read: the union of the keys' bucket
 dirs) instead of every bucket, with the key predicate reaching the
-parquet footers. This script builds the same lake shape as
-mor_read_bench.py (clean base across all n_buckets + a delta wave
-confined to a bucket subset by the engine's own bucket expression) and
+parquet footers. This script builds a clean base across all n_buckets
+plus a delta wave confined to a bucket subset by the engine's own
+bucket expression, and
 INTERLEAVES timed reps A/B on the SAME lake state (host drift hits both
 arms equally):
 

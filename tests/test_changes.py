@@ -229,9 +229,6 @@ def test_empty_range_and_validation(spark, tmp_path):
     assert CHANGE_TYPE_COL in lake.read_changes(b, b).columns
     with pytest.raises(ValueError, match="newer than"):
         lake.read_changes(b, 0)
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    with pytest.raises(ValueError, match="mor"):
-        cow.read_changes(0)
 
 
 def test_expired_intermediate_snapshot_raises(spark, tmp_path):

@@ -59,8 +59,7 @@ def test_every_edge_case_key_lands_correctly(spark, tmp_path):
     """Edge-case-only log: the 16 FIXTURES.md F3 scenarios end to end."""
     log = generate.edge_case_df(spark)
     lake = ParquetLake(spark, str(tmp_path / "edge_lake"), n_buckets=8)
-    deduped = lww_aggregate(parse_envelopes(log))
-    lake.merge(deduped, 0)
+    lake.merge_parsed(parse_envelopes(log), 0)
     rows = {(r["repo"], r["path"]): r.asDict() for r in lake.read().collect()}
 
     exp = oracle.replay(generate.edge_case_events())["state"]

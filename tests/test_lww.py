@@ -88,11 +88,13 @@ def test_lww_plan_has_partial_aggregate(spark):
 
 
 def test_fused_merge_equals_explicit_lww_paths(spark, tmp_path):
-    """The fused path (LWW resolved inside the MERGE aggregation) must land
-    the same lake state as replay with an explicit pre-MERGE dedup stage,
-    for every lww method, on a log with duplicates/out-of-order/tx ties."""
+    """The fused path (LWW resolved inside the lake's merge-on-read) must
+    land the same state as an explicit pre-MERGE dedup of the same log,
+    for every lww method applied as a pure function, on a log with
+    duplicates/out-of-order/tx ties."""
     import random as _random
 
+    from pyspark_cdc.order import lww
     from pyspark_cdc.sink import ParquetLake
     from pyspark_cdc.stream import replay_batch
     from pyspark_cdc.schemas import KAFKA_SHAPE
@@ -109,13 +111,18 @@ def test_fused_merge_equals_explicit_lww_paths(spark, tmp_path):
     log_dir = str(tmp_path / "log")
     spark.createDataFrame(recs, schema=KAFKA_SHAPE).repartition(4).write.parquet(log_dir)
 
-    states = {}
-    for method in ("fused", "aggregate", "window"):
-        lake = ParquetLake(spark, str(tmp_path / f"lake_{method}"), n_buckets=8)
-        replay_batch(spark, log_dir, lake, lww_method=method)
+    lake = ParquetLake(spark, str(tmp_path / "lake"), n_buckets=8)
+    replay_batch(spark, log_dir, lake)
+    states = {"fused": {
+        (r["repo"], r["path"]): (r["content"], r["commit"])
+        for r in lake.read().collect()
+    }}
+    parsed = parse_envelopes(spark.read.schema(KAFKA_SHAPE).parquet(log_dir))
+    for method in ("aggregate", "window"):
         states[method] = {
             (r["repo"], r["path"]): (r["content"], r["commit"])
-            for r in lake.read().collect()
+            for r in lww(parsed, method).collect()
+            if r["effective_op"] != "d"
         }
     assert states["fused"] == states["aggregate"] == states["window"]
     assert states["fused"][("r", "p3")][0] is not None

@@ -1,7 +1,7 @@
-"""Merge-on-read lake mode: delta-append merges, read-time LWW, periodic
-compaction — final state must equal the COW lake and the pure-Python
-oracle on the same log (max_by is associative, so WHERE the LWW resolves
-cannot change the winner)."""
+"""Merge-on-read lake: delta-append merges, read-time LWW, periodic
+compaction — final state must equal the pure-Python oracle and a
+one-batch lake folded by a full major compaction on the same log (max_by
+is associative, so WHERE the LWW resolves cannot change the winner)."""
 
 from __future__ import annotations
 
@@ -25,25 +25,47 @@ def _write_log(spark, tmp_path, n=3_000, files=6):
     return log_dir
 
 
-def test_mor_equals_cow_and_oracle(spark, tmp_path):
-    log_dir = _write_log(spark, tmp_path)
+def _folded_rows(spark, tmp_path, n_buckets, raw):
+    """Reference state: `raw` ingested as ONE batch into a fresh lake and
+    folded into the base by a full major compaction — the same
+    resolve_lww_clustered bucket rewrite every base writer runs."""
+    from pyspark_cdc.stream import process_batch
 
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=16, mode="cow")
-    replay_batch(spark, log_dir, cow)
+    ref = ParquetLake(spark, str(tmp_path / "ref"), n_buckets=n_buckets,
+                      mode="mor")
+    process_batch(raw, 0, ref)
+    ref.compact_now(tier="major", full=True)
+    assert ref.current_meta()["deltas"] == []
+    return _rows(ref)
+
+
+def _log_rows(spark, tmp_path, n_buckets, log_dir):
+    from pyspark_cdc.sources import file_batch
+
+    return _folded_rows(spark, tmp_path, n_buckets, file_batch(spark, log_dir))
+
+
+def _assert_oracle_state(got, recs):
+    """Every column the pure-Python oracle emits must match."""
+    exp = replay(recs)["state"]
+    assert set(got) == set(exp)
+    for k, row in exp.items():
+        for c, v in row.items():
+            assert got[k].get(c) == v, (k, c, got[k].get(c), v)
+
+
+def test_mor_equals_major_fold_and_oracle(spark, tmp_path):
+    log_dir = _write_log(spark, tmp_path)
 
     mor = ParquetLake(spark, str(tmp_path / "mor"), n_buckets=16, mode="mor")
     replay_batch(spark, log_dir, mor)
 
-    assert _rows(cow) == _rows(mor)
+    assert _log_rows(spark, tmp_path, 16, log_dir) == _rows(mor)
 
-    # oracle parity (content only; dict replay of reference semantics)
+    # oracle parity (dict replay of reference semantics)
     recs = [r.asDict() for r in spark.read.parquet(log_dir).collect()]
     recs.sort(key=lambda r: (r["offset"], r["partition"]))
-    oracle = replay(recs)["state"]
-    got = _rows(mor)
-    assert set(got) == set(oracle)
-    for k, exp in oracle.items():
-        assert got[k].get("content") == exp.get("content"), k
+    _assert_oracle_state(_rows(mor), recs)
 
 
 def test_mor_streaming_compacts_and_stays_correct(spark, tmp_path):
@@ -64,9 +86,10 @@ def test_mor_streaming_compacts_and_stays_correct(spark, tmp_path):
     assert len(meta["deltas"]) <= 3
     assert len(mor.applied_batch_ids()) == 8
 
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=16, mode="cow")
-    replay_batch(spark, log_dir, cow)
-    assert _rows(cow) == _rows(mor)
+    assert _log_rows(spark, tmp_path, 16, log_dir) == _rows(mor)
+    _assert_oracle_state(
+        _rows(mor), [r.asDict() for r in spark.read.parquet(log_dir).collect()]
+    )
 
 
 def test_mor_duplicate_batch_is_noop(spark, tmp_path):
@@ -111,16 +134,17 @@ def test_compaction_expires_snapshots_and_orphan_dirs(spark, tmp_path):
         m = _json.load(open(os.path.join(meta_dir, f)))
         referenced |= {p.split(os.sep + BUCKET_COL + "=", 1)[0]
                        for p in m.get("buckets", {}).values()}
-        referenced |= {d["path"] if isinstance(d, dict) else d
-                       for d in m.get("deltas", [])}
+        referenced |= {d["path"] for d in m.get("deltas", [])}
     on_disk = {os.path.join("data", d)
                for d in os.listdir(str(tmp_path / "mor" / "data"))}
     assert on_disk <= referenced | {os.path.join("data", "d0")} or on_disk <= referenced
 
-    # final state still equals a fresh COW replay
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=8, mode="cow")
-    replay_batch(spark, log_dir, cow)
-    assert _rows(cow) == _rows(mor)
+    # final state still equals a fresh one-batch major-folded replay and
+    # the oracle
+    assert _log_rows(spark, tmp_path, 8, log_dir) == _rows(mor)
+    _assert_oracle_state(
+        _rows(mor), [r.asDict() for r in spark.read.parquet(log_dir).collect()]
+    )
 
 
 def test_crash_between_delta_write_and_commit_is_safe(spark, tmp_path):
@@ -707,10 +731,10 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     """The read-path twin of the subset major: between compactions the
     steady-state MoR read broadcast-joins ONLY the base buckets the
     outstanding deltas touch (the manifest's per-delta bucket lists);
-    untouched buckets stream through join-free. All four paths must agree
-    row-for-row — the subset broadcast read (the new default), the
-    whole-base broadcast join (the legacy-manifest fallback), the global
-    LWW aggregate, and a fresh COW replay of the same batches — and the
+    untouched buckets stream through join-free. Every path must agree
+    row-for-row — the subset broadcast read (the default), the global
+    LWW aggregate, the pure-Python oracle, and the same batches ingested
+    as one batch and folded by a full major — and the
     path-level proof is in inputFiles(): the join side's base scan lists
     ONLY touched-bucket files, the pass-through side only the rest, and
     together they cover the base exactly."""
@@ -758,26 +782,23 @@ def test_subset_mor_read_joins_only_touched_buckets(spark, tmp_path):
     touched = ParquetLake._delta_touched_buckets(meta)
     assert set(touched) == {touched_bucket, kb[new_key]}
 
-    # 1) the four strategies agree row-for-row
+    # 1) every strategy agrees row-for-row
     got = _rows(lake)  # default path: subset broadcast (tiny delta bytes)
     assert got[tk[0]]["content"] == "v2000"
     assert got[tk[2]]["content"] == "v2300"
     assert got[new_key]["content"] == "v2200"
     assert tk[1] not in got
 
-    lake._delta_touched_buckets = lambda meta, route=None: None  # legacy: no bucket lists
-    assert _rows(lake) == got  # whole-base broadcast join fallback
-    del lake._delta_touched_buckets
-
     lake.broadcast_delta_bytes = -1
     assert _rows(lake) == got  # global LWW aggregate
     lake.broadcast_delta_bytes = 32 * 1024 * 1024
 
-    cow = ParquetLake(spark, str(tmp_path / "cow"), n_buckets=n_buckets,
-                      mode="cow")
-    for bid, recs_ in enumerate(batches):
-        feed(cow, bid, recs_)
-    assert _rows(cow) == got
+    all_recs = [r for recs_ in batches for r in recs_]
+    _assert_oracle_state(got, all_recs)
+    assert _folded_rows(
+        spark, tmp_path, n_buckets,
+        spark.createDataFrame(all_recs, schema=KAFKA_SHAPE),
+    ) == got
 
     # 2) path-level pruning proof: the join side scans only touched
     # buckets, the pass-through side only the rest, covering the base
